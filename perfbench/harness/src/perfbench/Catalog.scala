@@ -61,9 +61,10 @@ object Catalog {
     val start = System.nanoTime()
     val (cold, coldS, coldSpans) = pass()
     val warmPasses = mutable.ArrayBuffer.empty[(Seq[Op], Double)]
-    // At least one warm pass; more only while they fit in --seconds.
-    while (warmPasses.isEmpty ||
-      (System.nanoTime() - start) / 1e9 + warmPasses.map(_._2).max <= o.seconds) {
+    // Warm passes feed only per-layer figures, so only traced runs make
+    // them: at least one, more while they fit in --seconds.
+    while (o.trace && (warmPasses.isEmpty ||
+      (System.nanoTime() - start) / 1e9 + warmPasses.map(_._2).max <= o.seconds)) {
       val (ops, s, _) = pass()
       warmPasses += ((ops, s))
     }
@@ -72,8 +73,8 @@ object Catalog {
     tr.drain(spark)
     tr.settle()
 
-    val warm1 = warmPasses.head._1.map(op => op.name -> op.seconds).toMap
     val layers: Map[String, Any] = if (!o.trace) Map.empty else {
+      val warm1 = warmPasses.head._1.map(op => op.name -> op.seconds).toMap
       val coldIds = coldSpans.map(_.id).toSet
       def inCold(layer: String)(s: Span) = coldIds(s.id) && s.layer == layer
       val catalog = Harness.layer(tr, "catalog", o.cores)(s => coldIds(s.id) && s.layer != "catalog")

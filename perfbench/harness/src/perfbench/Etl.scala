@@ -2,8 +2,8 @@ package perfbench
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, current_timestamp}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, current_timestamp, lit}
 
 import graft.{Pipeline, Report}
 import graft.model.CrmSchema
@@ -13,13 +13,14 @@ import graft.transform.{EdgeBuilder, GraphTransform}
 /** The ETL workload: `Pipeline.run` of a base snapshot into an empty state
   * directory, `Pipeline.run` of a delta snapshot into the same directory
   * from a fresh session (as the CLI does), then the fixed list of
-  * `Report.run` state calls. One such cycle is a pass; the first runs in a
-  * fresh JVM, later ones reuse it with new state directories.
+  * `Report.run` state calls, once, in a fresh JVM.
   *
-  * Traced runs also call the layers `Pipeline.run` composes, each on its
-  * own before the matching `Pipeline.run`: `transformAll` plus
-  * `EdgeBuilder.validate`, `ScdLoader.applyScd` over the five SCD tables and
-  * `ScdLoader.edgeChanges`.
+  * Traced runs then call the layers `Pipeline.run` composes, in a session
+  * of their own after every measured call, so that none of the measured
+  * calls is warmed by them: `transformAll` plus `EdgeBuilder.validate`,
+  * `ScdLoader.applyScd` over the five SCD tables and `ScdLoader.edgeChanges`,
+  * for the base snapshot against an empty state and for the delta snapshot
+  * against a copy of the state as the load left it.
   */
 object Etl {
 
@@ -76,20 +77,23 @@ object Etl {
       "temporal.relchange_rows" -> relRows.toDouble)
   }
 
-  /** Row counts of the state after the reload, for the output check. */
+  /** Row counts of the state after the reload, for the output check, in
+    * one query over every table. */
   private def stateCounts(spark: SparkSession, state: String): Map[String, Long] = {
-    def n(df: Option[DataFrame]) = df.map(_.count()).getOrElse(0L)
     val perTable = Tables.flatMap { t =>
-      Seq(s"current_$t" -> n(Pipeline.currentTable(spark, state, t)),
-        s"history_$t" -> n(Pipeline.historyTable(spark, state, t)))
+      Seq(s"current_$t" -> Pipeline.currentTable(spark, state, t),
+        s"history_$t" -> Pipeline.historyTable(spark, state, t))
     }
     val rel = Pipeline.relChanges(spark, state)
     val changes = Seq("added", "removed").map { c =>
-      s"relchanges_$c" -> n(rel.map(_.filter(col("change_type") === c)))
+      s"relchanges_$c" -> rel.map(_.filter(col("change_type") === c))
     }
-    val events = EventTables.map(t => s"events_$t" ->
-      spark.read.parquet(s"$state/events_$t").count())
-    (perTable ++ changes ++ events).toMap + ("edges" -> spark.read.parquet(s"$state/edges").count())
+    val events = EventTables.map(t => s"events_$t" -> Some(spark.read.parquet(s"$state/events_$t")))
+    val tables = perTable ++ changes ++ events :+ ("edges" -> Some(spark.read.parquet(s"$state/edges")))
+    val rows = tables.collect { case (k, Some(df)) => df.select(lit(k).as("k")) }
+      .reduce(_ unionByName _).groupBy("k").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    tables.map { case (k, _) => k -> rows.getOrElse(k, 0L) }.toMap
   }
 
   private def dirStats(path: String): (Long, Long) = {
@@ -104,11 +108,22 @@ object Etl {
     } finally files.close()
   }
 
+  private def copyTree(from: String, to: String): Unit = {
+    val src = java.nio.file.Paths.get(from)
+    val files = java.nio.file.Files.walk(src)
+    try files.forEach { p =>
+      val dst = java.nio.file.Paths.get(to).resolve(src.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
+      else java.nio.file.Files.copy(p, dst)
+    } finally files.close()
+  }
+
   def run(o: Harness.Opts): Map[String, Any] = {
     val tr = new Tracer(o.trace)
     val setups = mutable.ArrayBuffer.empty[Double]
     val (base, delta) = (o("base"), o("delta"))
     val state = s"${o.work}/state"
+    val loaded = s"${o.work}/state_loaded"
     val warm = (s: SparkSession) => Seq(base, delta).foreach { d =>
       s.read.schema(CrmSchema.envelope).json(s"$d/contacts.json").count()
     }
@@ -116,68 +131,65 @@ object Etl {
     // last two of `--setups` samples.
     (3 to o.setups).foreach(_ => Harness.stop(Harness.setUp(o, setups)(warm)))
     val op = tr.newOp()
-    val start = System.nanoTime()
     var spark = Harness.setUp(o, setups)(warm)
     tr.attach(spark)
-    val loadLayers = if (o.trace) layers(spark, tr, op, base, state, "load") else Map.empty[String, Double]
     val (_, loadS) = tr.span(spark, op, "pipeline", "load")(Pipeline.run(spark, base, state))
     tr.drain(spark)
     Harness.stop(spark)
+    // Traced runs keep the state as the load left it, for the reload's
+    // layer calls; the copy is made between the two timed calls.
+    if (o.trace) copyTree(state, loaded)
     spark = Harness.setUp(o, setups)(warm)
     tr.attach(spark)
-    val reloadLayers = if (o.trace) layers(spark, tr, op, delta, state, "reload") else Map.empty[String, Double]
     val (_, reloadS) = tr.span(spark, op, "pipeline", "reload")(Pipeline.run(spark, delta, state))
-
-    def reportPass(k: Int): (Seq[Map[String, Any]], Double) = {
-      val t0 = System.nanoTime()
-      val runs = Reports.map { case (name, flags) =>
-        val args = (state +: flags) ++ Seq("--format", "json", "--out", s"${o.work}/reports_$k/$name")
-        val (rc, s) = tr.span(spark, if (k == 0) op else tr.newOp(), "query", name)(
-          Report.run(spark, args.toArray))
-        Map("name" -> name, "seconds" -> s, "rc" -> rc, "dir" -> s"${o.work}/reports_$k/$name")
-      }
-      (runs, (System.nanoTime() - t0) / 1e9)
+    val t0 = System.nanoTime()
+    val reports = Reports.map { case (name, flags) =>
+      val dir = s"${o.work}/reports/$name"
+      val args = (state +: flags) ++ Seq("--format", "json", "--out", dir)
+      val (rc, s) = tr.span(spark, op, "query", name)(Report.run(spark, args.toArray))
+      Map("name" -> name, "seconds" -> s, "rc" -> rc, "dir" -> dir)
     }
-    val (reports, reportS) = reportPass(0)
-    // Warm passes repeat the report calls on the reload session: the load
-    // and reload cannot be repeated on the same state. They are short, so
-    // at least three run and their median is reported.
-    val warmPasses = mutable.ArrayBuffer.empty[(Seq[Map[String, Any]], Double)]
-    while (warmPasses.size < 3 ||
-      (System.nanoTime() - start) / 1e9 + warmPasses.map(_._2).max <= o.seconds)
-      warmPasses += reportPass(warmPasses.size + 1)
+    val reportS = (System.nanoTime() - t0) / 1e9
     val counts = stateCounts(spark, state)
     val (files, bytes) = dirStats(state)
     tr.drain(spark)
-    tr.settle()
     val health = Harness.health(spark)
     Harness.stop(spark)
-    val layerFigs = (loadLayers.keySet ++ reloadLayers.keySet).map(k =>
-      k -> (loadLayers.getOrElse(k, 0.0) + reloadLayers.getOrElse(k, 0.0))).toMap
 
     val layerOut: Map[String, Any] = if (!o.trace) Map.empty else {
-      val first = tr.spans.filter(_.op == op).map(_.id).toSet
-      def in(layer: String)(s: Span) = first(s.id) && s.layer == layer
+      spark = Harness.session(o)
+      tr.attach(spark)
+      val loadLayers = layers(spark, tr, op, base, s"${o.work}/state_empty", "load")
+      val reloadLayers = layers(spark, tr, op, delta, loaded, "reload")
+      tr.drain(spark)
+      tr.settle()
+      Harness.stop(spark)
+      val layerFigs = (loadLayers.keySet ++ reloadLayers.keySet).map(k =>
+        k -> (loadLayers.getOrElse(k, 0.0) + reloadLayers.getOrElse(k, 0.0))).toMap
+      def in(layer: String)(s: Span) = s.op == op && s.layer == layer
       def self(prefix: String) =
-        tr.spans.filter(s => first(s.id) && s.name.startsWith(prefix)).map(tr.selfSeconds).sum
+        tr.spans.filter(s => s.op == op && s.name.startsWith(prefix)).map(tr.selfSeconds).sum
       val pipe = Harness.layer(tr, "pipeline", o.cores)(in("pipeline"))
       val transform = Harness.layer(tr, "transform", o.cores)(in("transform"))
       val temporal = Harness.layer(tr, "temporal", o.cores)(in("temporal"))
       val query = Harness.layer(tr, "query", o.cores)(in("query"))
       val perReport = tr.spans.filter(in("query")).map(s => s"query.${s.name}_s" -> s.nanos / 1e9)
-      val layerS = transform("transform.self_s") + temporal("temporal.self_s")
+      // An estimate: the layer calls run apart from Pipeline.run, warmer
+      // (same JVM, later), so the difference can go below 0; it is floored
+      // and the raw difference kept beside it.
+      val writeRaw = pipe("pipeline.self_s") - transform("transform.self_s") - temporal("temporal.self_s")
       pipe ++ transform ++ temporal ++ query ++ layerFigs ++ perReport ++ Map(
         "transform.s" -> transform("transform.self_s"),
         "temporal.scd_s" -> self("scd_"),
         "temporal.edge_diff_s" -> self("edge_diff_"),
-        "pipeline.write_s" -> (pipe("pipeline.self_s") - layerS),
+        "pipeline.write_s" -> math.max(0.0, writeRaw),
+        "pipeline.write_s_raw" -> writeRaw,
         "trace.cold_pass_s" -> (loadS + reloadS + reportS))
     }
     Map(
       "setup_s" -> setups.toSeq,
       "load_s" -> loadS, "reload_s" -> reloadS,
       "reports" -> reports, "report_pass_s" -> reportS,
-      "warm" -> warmPasses.toSeq.map { case (r, s) => Map("seconds" -> s, "reports" -> r) },
       "counts" -> counts, "state_files" -> files, "state_bytes" -> bytes,
       "layers" -> layerOut,
       "spans" -> (if (o.trace) Harness.spansJson(tr) else Seq.empty),

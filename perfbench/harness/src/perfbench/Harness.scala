@@ -15,8 +15,9 @@ import org.apache.spark.sql.SparkSession
   *   [--base DIR --delta DIR]
   *
   * Workloads: `catalog` runs the `--queries` list over the parquet tables in
-  * `--data`: one cold pass in a fresh session, then warm passes on the same
-  * session (at least one, more while they fit in `--seconds`). `etl` loads
+  * `--data`: one cold pass in a fresh session; traced runs then make warm
+  * passes on the same session (at least one, more while they fit in
+  * `--seconds`). `etl` loads
   * `--base` then reloads `--delta` into one state directory through
   * `graft.Pipeline`, then runs a fixed list of `graft.Report` state calls.
   * `plancheck` records whether the timed action keeps each query's final

@@ -3,7 +3,6 @@
 
 Usage (from the repository root):
   python3 perfbench/run.py --workload NAME --seed N --seconds S --trace 0|1
-      [--record]
 
 Builds the program and the harness from source (perfbench/build.py, into
 $CARGO_TARGET_DIR or .bench_build), makes the workload's inputs from the
@@ -12,9 +11,6 @@ every output and prints, as the last line, one JSON object with the keys
 correct, attempted, failed and metrics. The line before it carries the run's
 health stamp. `--trace 0` reports the end-to-end metrics of BENCHMARK.json,
 `--trace 1` its per-layer metrics. See perfbench/README.md.
-
-`--record` rewrites the expected catalog fingerprints of the seed's data
-variant instead of checking them.
 """
 import argparse
 import json
@@ -120,7 +116,7 @@ def harness(classpath, run_dir, args, deadline):
         fail(f"harness exited {rc}; log in {run_dir}/harness.log")
 
 
-def catalog_metrics(r, expected, record):
+def catalog_metrics(r, expected):
     passes = [r["cold"]] + [w["ops"] for w in r["warm"]]
     attempted = failed = 0
     bad = []
@@ -129,7 +125,7 @@ def catalog_metrics(r, expected, record):
             attempted += 1
             want = expected.get(op["name"])
             got = [op["rows"], op["hash"]]
-            if op["error"] or (not record and want != got):
+            if op["error"] or want != got:
                 failed += 1
                 bad.append({"name": op["name"], "got": got, "want": want,
                             "error": op["error"]})
@@ -139,7 +135,8 @@ def catalog_metrics(r, expected, record):
         "cold_pass_s": r["cold_pass_s"],
         "query_p50_s": statistics.median(cold),
     }
-    layers = {"catalog.warm_pass_s": statistics.median(w["seconds"] for w in r["warm"])}
+    layers = {"catalog.warm_pass_s": statistics.median(w["seconds"] for w in r["warm"])
+              if r["warm"] else 0.0}
     return attempted, failed, bad, metrics, layers
 
 
@@ -162,22 +159,19 @@ def etl_metrics(r, expected):
     if diff:
         failed += 2
         bad.append({"name": "load+reload", "got_want": diff})
-    for rep in r["reports"] + [x for w in r["warm"] for x in w["reports"]]:
+    for rep in r["reports"]:
         attempted += 1
         rows = report_rows(rep["dir"])
         want = expected["reports"][rep["name"]]
         if rep["rc"] != 0 or rows != want:
             failed += 1
             bad.append({"name": rep["name"], "rc": rep["rc"], "rows": rows, "want": want})
-    calls = [x["seconds"] for x in r["reports"]] + \
-        [x["seconds"] for w in r["warm"] for x in w["reports"]]
     metrics = {
         "setup_s": statistics.median(r["setup_s"]),
         "cold_pass_s": r["load_s"] + r["reload_s"] + r["report_pass_s"],
-        "query_p50_s": statistics.median(calls),
+        "query_p50_s": statistics.median(x["seconds"] for x in r["reports"]),
     }
     layers = {
-        "query.warm_pass_s": statistics.median(w["seconds"] for w in r["warm"]),
         "pipeline.load_s": r["load_s"],
         "pipeline.reload_s": r["reload_s"],
         "pipeline.files_written": float(r["state_files"]),
@@ -193,7 +187,6 @@ def main():
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
-    ap.add_argument("--record", action="store_true")
     a = ap.parse_args()
     t_start = time.time()
     deadline = t_start + RUN_LIMIT_S
@@ -232,17 +225,9 @@ def main():
             "--queries", ",".join(wl["queries"])], deadline)
         with open(f"{run_dir}/result.json") as f:
             r = json.load(f)
-        expected_all = {}
-        if os.path.exists(expected_path):
-            with open(expected_path) as f:
-                expected_all = json.load(f)
-        expected = expected_all.get(variant, {})
-        attempted, failed, bad, metrics, layers = catalog_metrics(r, expected, a.record)
-        if a.record and not failed:
-            expected_all[variant] = {op["name"]: [op["rows"], op["hash"]] for op in r["cold"]}
-            with open(expected_path, "w") as f:
-                json.dump(expected_all, f, indent=1, sort_keys=True)
-                f.write("\n")
+        with open(expected_path) as f:
+            expected = json.load(f)[variant]
+        attempted, failed, bad, metrics, layers = catalog_metrics(r, expected)
     else:
         raw = os.path.join(run_dir, "raw")
         expected = gen_crm.generate(raw, a.seed, wl["scale"])
@@ -271,12 +256,12 @@ def main():
     }
     record = {"workload": a.workload, "seed": a.seed, "trace": a.trace,
               "health": stamp, "mismatches": bad, "result": result,
-              "spans": r.get("spans", [])}
+              "layers": r.get("layers", {}), "spans": r.get("spans", [])}
     os.makedirs(os.path.join(out, "results"), exist_ok=True)
     with open(os.path.join(out, "results", os.path.basename(run_dir) + ".json"), "w") as f:
         json.dump(record, f, indent=1)
     for sub in ("raw", "tmp", "spark-local", "warehouse") + tuple(
-            d for d in os.listdir(run_dir) if d.startswith(("state", "reports_"))):
+            d for d in os.listdir(run_dir) if d.startswith(("state", "reports"))):
         shutil.rmtree(os.path.join(run_dir, sub), ignore_errors=True)
     if bad:
         print(json.dumps({"mismatches": bad[:10]}), file=sys.stderr)

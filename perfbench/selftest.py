@@ -83,7 +83,7 @@ class HarnessTest(unittest.TestCase):
     def test_fingerprints_repeat_across_runs(self):
         with open(os.path.join(HERE, "workloads.json")) as f:
             queries = json.load(f)["catalog_iterative"]["queries"]
-        args = ["--workload", "catalog", "--seconds", "0", "--setups", "1",
+        args = ["--workload", "catalog", "--seconds", "0", "--trace", "1", "--setups", "1",
                 "--queries", ",".join(queries)]
         prints = []
         for i in range(2):
